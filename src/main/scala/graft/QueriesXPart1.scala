@@ -226,14 +226,10 @@ private[graft] trait QueriesXPart1 extends QueriesXShared {
   def qBfsDepth(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select((col("l_orderkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    // edge set truncated once (it feeds all three frontier joins), each
-    // frontier persisted (it feeds the next join AND the final union —
-    // uncached, the final job recomputed the whole chain per consumer,
-    // O(rounds²) replays of the edge distinct; localCheckpoint would
-    // trip the Union constraint-rewrite bug, see Graph.bipartiteCheck) (r16)
-    // persist + src layout instead of localCheckpoint (r17): the cached
-    // plan keeps hashpartitioning(src), so each round's frontier join
-    // exchanges only the frontier (see Graph.pageRank's note)
+    // Graph.bfsReached's loop (persisted src-layout edges, each frontier
+    // persisted for the next join AND the final union — see its note),
+    // except that the last round dedups too; the helper skips that
+    // dedup, so calling it here would drop an Exchange from this plan
     val edges = li.union(li.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src")).distinct().persist()
     val init = s.range(1).select(lit(0L).as("node"), lit(0L).as("d"))

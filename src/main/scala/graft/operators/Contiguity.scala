@@ -214,16 +214,14 @@ object Contiguity {
     // LAZY checkpoints: the per-round sig() aggregation is the action that
     // materializes the round's blocks, so eager localCheckpoint's separate
     // materialization job disappears — one job per round, not two.
-    // Rotation releases round i−1's blocks once round i is materialized
-    // (and the exceptAll probe, the only other reader of the old round,
-    // has run) — without it the loop holds every round's frontier
-    // simultaneously, O(rounds × |edges|) storage for O(|edges|) work.
-    val rot = new graft.util.Checkpoints.Rotation(edges.sparkSession)
-    rot.begin()
+    // Each round releases the round it replaced once the new one is
+    // materialized (and the exceptAll probe, the only other reader of the
+    // old round, has run) — without it the loop holds every round's
+    // frontier simultaneously, O(rounds × |edges|) storage for O(|edges|)
+    // work.
     var e = graft.util.Checkpoints.truncate(
       edges.select(keys.map(col) :+ col("a") :+ col("b"): _*), eager = false)
     var (eCount, eSum) = sig(e)
-    rot.rotate()
     // Size-adaptive algorithm choice off the edge count the convergence
     // checksum just measured (no extra job): under the cutoff, one
     // union-find task produces the identical min-id labels for the cost
@@ -241,12 +239,11 @@ object Contiguity {
     var stable = false
     var i = 0
     while (!stable && i < maxIter) {
-      rot.begin()
       val next = graft.util.Checkpoints.truncate(
         star(star(e, keys, large = true), keys, large = false), eager = false)
       val (nCount, nSum) = sig(next)
       stable = nCount == eCount && nSum == eSum && next.exceptAll(e).isEmpty
-      rot.rotate()
+      graft.util.Checkpoints.release(e)
       e = next
       eCount = nCount
       eSum = nSum

@@ -21,6 +21,20 @@ object Graph {
     */
   private val Dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
 
+  /** 2^40: the fixed-point grid every snapped score sum accumulates on. */
+  private val S = 1099511627776.0
+
+  /** Both directions of every (src, dst) edge. Union symmetrize kept
+    * deliberately: an r17 explode-based one-scan variant (read the source
+    * once, emit both directions) measured flat-to-slower at sf0.1 — the
+    * union's two scan branches run as twice the parallel tasks on the
+    * 3-split input, which beats halving the IO on an otherwise idle
+    * 32-core box. At cluster scale both forms saturate.
+    */
+  private def symmetrize(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+
   /** Node table with out-degrees in ONE exchange: explode each edge into
     * an (src, 1) and a (dst, 0) marker and hash-aggregate by node —
     * replaces the separate nodes union∪distinct exchange, out-degree
@@ -37,6 +51,26 @@ object Graph {
       .select(col("node"),
         when(col("_od") > 0L, col("_od")).otherwise(lit(null).cast("long"))
           .as("outdeg"))
+
+  /** The PageRank contribution step shared by [[pageRank]] and
+    * [[personalizedPageRank]]: every non-sink node sends rank/outdeg along
+    * its out-edges, summed per destination as `(dst, in_sum)`.
+    */
+  private def incoming(e: DataFrame, ranks: DataFrame): DataFrame = {
+    val contrib = ranks.filter(col("outdeg").isNotNull)
+      .select(col("node").as("c_src"),
+        (col("rank") / col("outdeg").cast("double")).as("contrib"))
+    e.join(contrib, col("src") === col("c_src"))
+      .groupBy(col("dst"))
+      // LONG sum, not Dec38 (r17): per-destination snapped sums are
+      // mass-conservation-bounded — Σ contributions to any dst ≤ Σ all
+      // ranks ≤ 1, so the sum is ≤ ~2^41 at EVERY scale and cannot wrap
+      // (unlike hits' unnormalized raw sums, which genuinely need the
+      // decimal). Same exact integers, primitive hash-agg buffers
+      // instead of decimal ops on the per-edge hot path (guide §2.3).
+      .agg((sum(floor(col("contrib") * S + 0.5).cast("long")).cast("double") / S)
+        .as("in_sum"))
+  }
 
   /** PageRank as pure DataFrame algebra, deterministic BY CONSTRUCTION
     * like [[Similarity.kmeans]]:
@@ -67,23 +101,16 @@ object Graph {
     * The dangling sum snaps each sink's rank to the same 2^40 grid and
     * sums longs, so the scalar is partition-independent like everything
     * else here.
-    */
-  /** @param checkpoint disable ONLY to inspect the full-lineage plan in
-    *                    tests — production iteration must truncate lineage
-    *                    (the rank table is referenced twice per round, so
-    *                    an uncheckpointed plan doubles per iteration)
+    *
     * @param redistributeDangling add each iteration's sink-node mass back
     *                    uniformly: rank' = (1-d)/n + d*(in_sum + dangling/n)
     */
-  def pageRank(edges: DataFrame, iters: Int, checkpoint: Boolean = true,
+  def pageRank(edges: DataFrame, iters: Int,
                redistributeDangling: Boolean = false): DataFrame = {
-    val S = 1099511627776.0 // 2^40: the fixed-point grid of the exact sum
     // edges and degrees are REUSED every iteration — materialize them once
     // (the standard persist-the-edge-table shape of iterative graph
     // algorithms; recomputing the distinct per round cost ~40% of the
     // sf0.1 bench time for this operator)
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).distinct()
     // persist with a src-hash layout instead of localCheckpoint (r17):
     // a cached plan KEEPS its outputPartitioning, while localCheckpoint's
     // LogicalRDD drops it (the r16 experiment that stalled the
@@ -95,7 +122,8 @@ object Graph {
     // exchanges only the node-sized side: the per-round re-shuffle of
     // the edge table disappears. persist keeps the (short) lineage, so
     // an evicted block recomputes instead of failing the job.
-    val e = if (checkpoint) e0.persist() else e0
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).distinct().persist()
     // nodes + out-degrees in ONE exchange (r17, [[nodeStats]]); truncated
     // so the n_nodes count below reads persisted blocks, not the plan.
     // outdeg is STATIC per node — folded into the rank table once (null
@@ -103,41 +131,23 @@ object Graph {
     // node-keyed join per round, and the dangling variant reads sinks off
     // the same table instead of an anti-join per round (r8; the oracle's
     // unrolled update is arithmetically identical, so hashes don't move)
-    val stats0 = nodeStats(e)
-    val stats = if (checkpoint) Checkpoints.truncate(stats0, eager = false)
-                else stats0
+    val stats = Checkpoints.truncate(nodeStats(e), eager = false)
     val nTotal = stats.agg(count(lit(1)).as("n_nodes"))
-    val ranks0 = stats
-      .crossJoin(broadcast(nTotal))
-      .select(col("node"),
-        (lit(1.0) / col("n_nodes").cast("double")).as("rank"),
-        col("n_nodes"), col("outdeg"))
     // Truncate the INITIAL rank table too (node-sized, one extra tiny job):
     // round 1's plan otherwise embeds the nodes∪distinct + outdeg + count
     // derivation tree TWICE (contrib branch + withIn branch), and every
     // broadcast-exchange subquery Catalyst plants in the round re-runs that
     // tree as its own job — profiled at 17 jobs for iters=2 on q_pagerank,
     // with the derivation stages re-reading the edge blocks 10-20× (r16).
-    var ranks = if (checkpoint) Checkpoints.truncate(ranks0) else ranks0
-    val rot = new Checkpoints.Rotation(edges.sparkSession)
+    var ranks = Checkpoints.truncate(stats
+      .crossJoin(broadcast(nTotal))
+      .select(col("node"),
+        (lit(1.0) / col("n_nodes").cast("double")).as("rank"),
+        col("n_nodes"), col("outdeg")))
     for (_ <- 1 to iters) {
-      if (checkpoint) rot.begin()
-      val contrib = ranks.filter(col("outdeg").isNotNull)
-        .select(col("node").as("c_src"),
-          (col("rank") / col("outdeg").cast("double")).as("contrib"))
-      val incoming = e.join(contrib, col("src") === col("c_src"))
-        .groupBy(col("dst"))
-        // LONG sum, not Dec38 (r17): per-destination snapped sums are
-        // mass-conservation-bounded — Σ contributions to any dst ≤ Σ all
-        // ranks ≤ 1, so the sum is ≤ ~2^41 at EVERY scale and cannot wrap
-        // (unlike hits' unnormalized raw sums, which genuinely need the
-        // decimal). Same exact integers, primitive hash-agg buffers
-        // instead of decimal ops on the per-edge hot path (guide §2.3).
-        .agg((sum(floor(col("contrib") * S + 0.5).cast("long")).cast("double") / S)
-          .as("in_sum"))
       val withIn = ranks.select(col("node"), col("n_nodes"), col("outdeg"))
-        .join(incoming, col("node") === col("dst"), "left")
-      ranks =
+        .join(incoming(e, ranks), col("node") === col("dst"), "left")
+      val next =
         if (redistributeDangling) {
           // sink mass = Σ rank over nodes with no out-edge, snapped per
           // node to the 2^40 grid and summed as longs (exact scalar);
@@ -159,16 +169,15 @@ object Graph {
               lit(0.875) * coalesce(col("in_sum"), lit(0.0))).as("rank"),
             col("n_nodes"), col("outdeg"))
         }
-      // EAGER + rotate (r14): the lazy form deferred every round's
-      // materialization to the single final action, so ALL rounds' blocks
-      // were live simultaneously — O(iters) copies of the node-sized rank
-      // table, which OOM'd the 24 GiB sf10 (100x) probe. One tiny
-      // node-sized job per round (~0.05 s at sf0.1) bounds storage to the
-      // newest round (+ the edge table).
-      if (checkpoint) {
-        ranks = Checkpoints.truncate(ranks)
-        rot.rotate()
-      }
+      // EAGER truncate, then release the replaced round (r14): the lazy
+      // form deferred every round's materialization to the single final
+      // action, so ALL rounds' blocks were live simultaneously — O(iters)
+      // copies of the node-sized rank table, which OOM'd the 24 GiB sf10
+      // (100x) probe. One tiny node-sized job per round (~0.05 s at
+      // sf0.1) bounds storage to the newest round (+ the edge table).
+      val prev = ranks
+      ranks = Checkpoints.truncate(next)
+      Checkpoints.release(prev)
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -190,63 +199,36 @@ object Graph {
     * @param teleport one column `node`: the seed set (deduplicated;
     *                 members absent from the graph are ignored)
     */
-  def personalizedPageRank(edges: DataFrame, teleport: DataFrame, iters: Int,
-                           checkpoint: Boolean = true): DataFrame = {
-    val S = 1099511627776.0
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).distinct()
+  def personalizedPageRank(edges: DataFrame, teleport: DataFrame, iters: Int): DataFrame = {
     // persist + src layout: see pageRank's note (r17)
-    val e = if (checkpoint) e0.persist() else e0
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).distinct().persist()
     // nodes + out-degrees in ONE exchange (r17, [[nodeStats]]) — see
     // pageRank's setup note; the old union∪distinct + outdeg agg + left
     // join shape is gone, the seed join is unchanged.
-    val stats0 = nodeStats(e)
-    val stats = if (checkpoint) Checkpoints.truncate(stats0, eager = false)
-                else stats0
+    val stats = Checkpoints.truncate(nodeStats(e), eager = false)
     val seeds = teleport.select(col("node")).distinct()
       .join(stats.select(col("node")), "node", "left_semi")
     val nSeeds = seeds.agg(count(lit(1)).as("n_seeds"))
-    val ranks0 = stats
+    // initial table truncated for the same reason as pageRank's (the
+    // teleport/outdeg derivation tree otherwise re-runs per broadcast job)
+    var ranks = Checkpoints.truncate(stats
       .join(seeds.withColumn("_is_seed", lit(1)), Seq("node"), "left")
       .crossJoin(broadcast(nSeeds))
       .select(col("node"), col("outdeg"),
         when(col("_is_seed").isNotNull,
           lit(1.0) / col("n_seeds").cast("double")).otherwise(lit(0.0)).as("tp"))
-      .withColumn("rank", col("tp"))
-    // initial table truncated for the same reason as pageRank's (the
-    // teleport/outdeg derivation tree otherwise re-runs per broadcast job)
-    var ranks = if (checkpoint) Checkpoints.truncate(ranks0) else ranks0
-    val rot = new Checkpoints.Rotation(edges.sparkSession)
+      .withColumn("rank", col("tp")))
     for (_ <- 1 to iters) {
-      if (checkpoint) rot.begin()
-      val contrib = ranks.filter(col("outdeg").isNotNull)
-        .select(col("node").as("c_src"),
-          (col("rank") / col("outdeg").cast("double")).as("contrib"))
-      val incoming = e.join(contrib, col("src") === col("c_src"))
-        .groupBy(col("dst"))
-        // LONG sum, not Dec38 (r17): per-destination snapped sums are
-        // mass-conservation-bounded — Σ contributions to any dst ≤ Σ all
-        // ranks ≤ 1, so the sum is ≤ ~2^41 at EVERY scale and cannot wrap
-        // (unlike hits' unnormalized raw sums, which genuinely need the
-        // decimal). Same exact integers, primitive hash-agg buffers
-        // instead of decimal ops on the per-edge hot path (guide §2.3).
-        .agg((sum(floor(col("contrib") * S + 0.5).cast("long")).cast("double") / S)
-          .as("in_sum"))
-      ranks = ranks.select(col("node"), col("outdeg"), col("tp"))
-        .join(incoming, col("node") === col("dst"), "left")
+      val next = ranks.select(col("node"), col("outdeg"), col("tp"))
+        .join(incoming(e, ranks), col("node") === col("dst"), "left")
         .select(col("node"), col("outdeg"), col("tp"),
           (lit(0.125) * col("tp") +
             lit(0.875) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-      // EAGER + rotate (r14): the lazy form deferred every round's
-      // materialization to the single final action, so ALL rounds' blocks
-      // were live simultaneously — O(iters) copies of the node-sized rank
-      // table, which OOM'd the 24 GiB sf10 (100x) probe. One tiny
-      // node-sized job per round (~0.05 s at sf0.1) bounds storage to the
-      // newest round (+ the edge table).
-      if (checkpoint) {
-        ranks = Checkpoints.truncate(ranks)
-        rot.rotate()
-      }
+      // eager truncate + release: see pageRank's note (r14)
+      val prev = ranks
+      ranks = Checkpoints.truncate(next)
+      Checkpoints.release(prev)
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -267,22 +249,19 @@ object Graph {
     * one final zero-fill gives nodes without in-edges authority 0 and
     * without out-edges hub 0.
     */
-  def hits(edges: DataFrame, iters: Int, checkpoint: Boolean = true): DataFrame = {
-    val S = 1099511627776.0
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     def snapSum(c: org.apache.spark.sql.Column) =
       sum(floor(c * S + 0.5).cast(Dec38)).cast("double") / S
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).distinct()
     // persist + src layout: see pageRank's note (r17) — the authority
     // half-round joins by src and reuses it; the hub half-round joins by
     // dst and exchanges as before (no loss)
-    val e = if (checkpoint) e0.persist() else e0
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).distinct().persist()
     // one-pass node set (explode instead of union: reads the persisted
     // edge blocks once, r17); feeds the initial hubs and the FINAL
     // zero-fill only — the per-round zero-fill joins are gone (below)
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-    val nodes = if (checkpoint) Checkpoints.truncate(nodes0) else nodes0
+    val nodes = Checkpoints.truncate(
+      e.select(explode(array(col("src"), col("dst"))).as("node")).distinct())
     // Loop WITHOUT zero-fill (r17): every e.src has an out-edge and every
     // e.dst an in-edge, so the nodes the old per-round `nodes ⟕ raw` left
     // joins added back carried score 0 and contributed floor(0·S+0.5) = 0
@@ -298,30 +277,26 @@ object Graph {
       return nodes.select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth"))
     var hub = nodes.select(col("node"), lit(1.0).as("hub"))
     var auth: DataFrame = null
-    val rot = new Checkpoints.Rotation(edges.sparkSession)
+    var raws = Seq.empty[DataFrame]
     for (_ <- 1 to iters) {
-      if (checkpoint) rot.begin()
-      val aRaw0 = e.join(hub.select(col("node").as("_s"), col("hub")),
-          col("src") === col("_s"))
-        .groupBy(col("dst")).agg(snapSum(col("hub")).as("a_raw"))
       // LAZY truncate: the next half-iteration's checkpoint (whose AQE
       // planning materializes the upstream exchanges) is the action
-      val aRaw = if (checkpoint) Checkpoints.truncate(aRaw0, eager = false)
-                 else aRaw0
+      val aRaw = Checkpoints.truncate(
+        e.join(hub.select(col("node").as("_s"), col("hub")), col("src") === col("_s"))
+          .groupBy(col("dst")).agg(snapSum(col("hub")).as("a_raw")), eager = false)
       val aSum = aRaw.agg(coalesce(snapSum(col("a_raw")), lit(0.0)).as("_l1"))
       auth = aRaw.crossJoin(broadcast(aSum))
         .select(col("dst").as("node"), (col("a_raw") / col("_l1")).as("auth"))
-      val hRaw0 = e.join(auth.select(col("node").as("_d"), col("auth")),
-          col("dst") === col("_d"))
-        .groupBy(col("src")).agg(snapSum(col("auth")).as("h_raw"))
-      val hRaw = if (checkpoint) Checkpoints.truncate(hRaw0, eager = false)
-                 else hRaw0
+      val hRaw = Checkpoints.truncate(
+        e.join(auth.select(col("node").as("_d"), col("auth")), col("dst") === col("_d"))
+          .groupBy(col("src")).agg(snapSum(col("auth")).as("h_raw")), eager = false)
       val hSum = hRaw.agg(coalesce(snapSum(col("h_raw")), lit(0.0)).as("_l1"))
       hub = hRaw.crossJoin(broadcast(hSum))
         .select(col("src").as("node"), (col("h_raw") / col("_l1")).as("hub"))
-      // round i−1's aRaw/hRaw blocks were materialized by this round's
-      // checkpoint planning; release them (r14 rotation discipline)
-      if (checkpoint) rot.rotate()
+      // the previous round's raw tables were materialized by this round's
+      // checkpoint planning; release them (r14)
+      Checkpoints.release(raws: _*)
+      raws = Seq(aRaw, hRaw)
     }
     // single zero-fill: nodes without out-/in-edges score hub/auth 0.0,
     // exactly the value the old per-round fill carried through
@@ -459,47 +434,35 @@ object Graph {
     * every node with ≥ 1 neighbor; `label` is the id of some member of
     * the node's community.
     */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       checkpoint: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     val und = edges.select(
       least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val nbr0 = und.select(col("u").as("node"), col("v").as("peer"))
-      .union(und.select(col("v").as("node"), col("u").as("peer")))
-      .repartition(col("peer"))
     // persist + peer layout: see pageRank's note (r17) — every round's
     // nbr⋈labels join reuses it and exchanges only the node-sized side
-    val nbr = if (checkpoint) nbr0.persist() else nbr0
-    val lbl0 = nbr.select(col("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
+    val nbr = und.select(col("u").as("node"), col("v").as("peer"))
+      .union(und.select(col("v").as("node"), col("u").as("peer")))
+      .repartition(col("peer")).persist()
     // initial label table truncated like pageRank's initial ranks: round 1
     // otherwise re-runs the node distinct inside each of its jobs (r16)
-    var lbl = if (checkpoint) Checkpoints.truncate(lbl0) else lbl0
-    val rot = new Checkpoints.Rotation(edges.sparkSession)
+    var lbl = Checkpoints.truncate(nbr.select(col("node")).distinct()
+      .select(col("node"), col("node").as("lbl")))
     for (_ <- 1 to iters) {
-      if (checkpoint) rot.begin()
       val counts = nbr
         .join(lbl.select(col("node").as("peer"), col("lbl")), "peer")
         .groupBy(col("node"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      lbl = counts.groupBy(col("node"))
+      // eager truncate + release: bound live copies to the newest round
+      // (r14 — the lazy form held every round's node-sized table at once;
+      // see pageRank's note)
+      val prev = lbl
+      lbl = Checkpoints.truncate(counts.groupBy(col("node"))
         .agg(min_by(col("lbl"), struct((-col("cnt")).as("nc"), col("lbl").as("tb")))
-          .as("lbl"))
-      // eager + rotate: bound live copies to the newest round (r14 — the
-      // lazy form held every round's node-sized table at once; see
-      // pageRank's note)
-      if (checkpoint) {
-        lbl = Checkpoints.truncate(lbl)
-        rot.rotate()
-      }
+          .as("lbl")))
+      Checkpoints.release(prev)
     }
     lbl.select(col("node"), col("lbl").as("label"))
   }
 
-  /** Degree histogram — the first diagnostic anyone runs on a link graph
-    * (hub detection, power-law sanity check, skew sizing for the
-    * PageRank/CC shuffles above). Two chained hash aggs: per-node degree,
-    * then nodes per degree. Both partial+final; nothing sorts.
-    */
   /** Bounded-round k-core peeling (Seidman 1983; the distributed
     * formulation is Batagelj & Zaversnik 2003): repeatedly delete nodes of
     * degree < k, here for a FIXED number of rounds so both engines (and
@@ -516,40 +479,59 @@ object Graph {
     * of the surviving subgraph — degrees still below k mean more rounds
     * were needed, which the bounded form reports honestly.
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            checkpoint: Boolean = true): DataFrame = {
-    // union symmetrize kept deliberately: an r17 explode-based one-scan
-    // variant (read the source once, emit both directions) measured flat-
-    // to-slower at sf0.1 — the union's two scan branches run as twice the
-    // parallel tasks on the 3-split input, which beats halving the IO on
-    // an otherwise idle 32-core box. At cluster scale both forms saturate.
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    var e = if (checkpoint) Checkpoints.truncate(und) else und
-    val rot = new Checkpoints.Rotation(edges.sparkSession)
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    var e = Checkpoints.truncate(symmetrize(edges).distinct())
     for (_ <- 1 to rounds) {
-      if (checkpoint) rot.begin()
       // lazy truncate (zero extra jobs): keep feeds BOTH semi-joins, and
       // Catalyst typically broadcasts it — each broadcast job would re-run
       // the degree aggregation; the persisted blocks compute once and are
       // shared across the round's jobs (r16)
-      val keep0 = e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
-        .filter(col("_d") >= k).select(col("src").as("_k"))
-      val keep = if (checkpoint) Checkpoints.truncate(keep0, eager = false)
-                 else keep0
-      val e2 = e.join(keep, col("src") === col("_k"), "left_semi")
-        .join(keep, col("dst") === col("_k"), "left_semi")
-      // eager + rotate: each peel's survivor set replaces the last — the
-      // lazy form held every round simultaneously (see pageRank's note)
-      e = if (checkpoint) {
-        val t = Checkpoints.truncate(e2)
-        rot.rotate()
-        t
-      } else e2
+      val keep = Checkpoints.truncate(e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
+        .filter(col("_d") >= k).select(col("src").as("_k")), eager = false)
+      // eager truncate + release: each peel's survivor set replaces the
+      // last (and consumes this round's keep) — the lazy form held every
+      // round simultaneously (see pageRank's note)
+      val prev = e
+      e = Checkpoints.truncate(e.join(keep, col("src") === col("_k"), "left_semi")
+        .join(keep, col("dst") === col("_k"), "left_semi"))
+      Checkpoints.release(prev, keep)
     }
     e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
       .select(col("src").as("node"), col("degree"))
+  }
+
+  /** Bounded multi-source BFS over `e`, a persisted (src, dst) edge table:
+    * `start` holds the round-0 frontier — a `node` column, a `d` column
+    * and any label columns (a landmark id) that every reached row carries
+    * along. Returns the union of every round's frontier, `(labels..., node,
+    * d)` rows with d = hop count; a node reached several ways appears once
+    * per way, so callers take the min d.
+    *
+    * Each deduped frontier is persisted, NOT localCheckpointed: it feeds
+    * BOTH the next round's join and the reached-union, so uncached the
+    * final job recomputes the whole frontier chain once per consumer
+    * (O(rounds²) replays, r16). localCheckpoint is unusable here — its
+    * LogicalRDD keeps the pre-checkpoint constraints and the
+    * reached-union's constraint rewrite dies on the stale attribute ids
+    * (NoSuchElementException in Union.rewriteConstraints, Spark 4.1, hit
+    * in r16). persist() keeps the (bounded, ≤12-round) lineage for
+    * analysis but computes each frontier once; Bench/Verify release all
+    * persisted blocks at query boundaries. The last round feeds only the
+    * caller's min-d aggregate, which dedups anyway — it skips the dedup
+    * shuffle.
+    */
+  private def bfsReached(e: DataFrame, start: DataFrame, rounds: Int): DataFrame = {
+    val labels = start.columns.filterNot(Set("node", "d")).map(c => col(s"f.$c"))
+    var frontier = start
+    var reached = start
+    for (i <- 1 to rounds) {
+      val step = frontier.as("f")
+        .join(e.as("g"), col("f.node") === col("g.src"))
+        .select(labels :+ col("g.dst").as("node") :+ lit(i.toLong).as("d"): _*)
+      frontier = if (i < rounds) step.distinct().persist() else step
+      reached = reached.union(frontier)
+    }
+    reached
   }
 
   /** Landmark harmonic closeness (the Eppstein–Wang 2004 sampling idea
@@ -561,65 +543,28 @@ object Graph {
     *
     * Determinism: reciprocal distances fold via the lcm scaling rule —
     * Σ(lcm/d) is an exact integer sum (lcm(1..rounds)); harmonic is ONE
-    * final double division. Multi-source BFS carries (landmark, node)
-    * labels so one unrolled loop serves every landmark at once; the
-    * frontier dedups per round and the edge list is checkpointed once.
-    * Unreached (landmark, node) pairs contribute nothing — exactly the
-    * harmonic-centrality convention for disconnected pairs (1/∞ = 0).
+    * final double division. Multi-source BFS ([[bfsReached]]) carries
+    * (landmark, node) labels so one unrolled loop serves every landmark
+    * at once. Unreached (landmark, node) pairs contribute nothing —
+    * exactly the harmonic-centrality convention for disconnected pairs
+    * (1/∞ = 0).
     *
     * Output: one row per reached node — (node, n_lm, h_scaled,
     * harmonic), landmarks' own rows keep d=0 pairs EXCLUDED.
     */
-  def landmarkCloseness(edges: DataFrame, landmarks: DataFrame,
-                        rounds: Int, checkpoint: Boolean = true)
+  def landmarkCloseness(edges: DataFrame, landmarks: DataFrame, rounds: Int)
       : DataFrame = {
     require(rounds >= 1 && rounds <= 12, "rounds in [1,12]")
     val lcm = (1 to rounds).foldLeft(1L)((a, b) =>
       a / BigInt(a).gcd(BigInt(b)).toLong * b)
-    // union symmetrize kept deliberately: an r17 explode-based one-scan
-    // variant (read the source once, emit both directions) measured flat-
-    // to-slower at sf0.1 — the union's two scan branches run as twice the
-    // parallel tasks on the 3-split input, which beats halving the IO on
-    // an otherwise idle 32-core box. At cluster scale both forms saturate.
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).distinct()
     // persist + src layout (see pageRank's note, r17): every BFS round's
     // frontier⋈edges join reuses the layout and exchanges only the
     // frontier; repartition-before-distinct keeps the exchange count at
     // one (hashpartitioning(src) satisfies the dedup's clustering)
-    val e = if (checkpoint) und.persist() else und
-    var frontier = landmarks.select(col("lm"), col("lm").as("node"),
-      lit(0L).as("d"))
-    var reached = frontier
-    for (i <- 1 to rounds) {
-      val step = frontier.as("f")
-        .join(e.as("g"), col("f.node") === col("g.src"))
-        .select(col("f.lm"), col("g.dst").as("node"), lit(i.toLong).as("d"))
-      // dedup bounds the NEXT round's join fan-out; the last round feeds
-      // only the min-d aggregate, which dedups anyway — skip the shuffle.
-      // Each deduped frontier is lazily truncated: it feeds BOTH the next
-      // round's join and the final reached-union, which otherwise recompute
-      // the whole frontier chain once per consumer (O(rounds²) recompute in
-      // the single final job; the persisted blocks compute once) (r16)
-      // persist, NOT localCheckpoint: each deduped frontier feeds the next
-      // round's join AND the final reached-union, so uncached the final job
-      // recomputes the whole frontier chain once per consumer (O(rounds²)
-      // replays). localCheckpoint is unusable here — its LogicalRDD keeps
-      // the pre-checkpoint constraints and the reached-union's constraint
-      // rewrite dies on the stale attribute ids (NoSuchElementException in
-      // Union.rewriteConstraints, Spark 4.1, hit in r16). persist() keeps
-      // the (bounded, ≤12-round) lineage for analysis but computes each
-      // frontier once; Bench/Verify release all persisted blocks at query
-      // boundaries.
-      frontier =
-        if (i < rounds) {
-          val d = step.distinct()
-          if (checkpoint) d.persist() else d
-        } else step
-      reached = reached.union(frontier)
-    }
-    reached.groupBy(col("lm"), col("node")).agg(min(col("d")).as("d"))
+    val e = symmetrize(edges).repartition(col("src")).distinct().persist()
+    val start = landmarks.select(col("lm"), col("lm").as("node"), lit(0L).as("d"))
+    bfsReached(e, start, rounds)
+      .groupBy(col("lm"), col("node")).agg(min(col("d")).as("d"))
       .filter(col("d") > 0L)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_lm"),
@@ -644,15 +589,7 @@ object Graph {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // und feeds the degree agg + the moment join, deg feeds both endpoint
     // joins — truncate once each (r16; richClub's discipline)
-    // union symmetrize kept deliberately: an r17 explode-based one-scan
-    // variant (read the source once, emit both directions) measured flat-
-    // to-slower at sf0.1 — the union's two scan branches run as twice the
-    // parallel tasks on the 3-split input, which beats halving the IO on
-    // an otherwise idle 32-core box. At cluster scale both forms saturate.
-    val und = Checkpoints.truncate(
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
+    val und = Checkpoints.truncate(symmetrize(edges).distinct())
     val deg = Checkpoints.truncate(
       und.groupBy(col("src")).agg(count(lit(1)).as("_deg")))
     val m = und
@@ -672,6 +609,11 @@ object Graph {
         .as("r"))
   }
 
+  /** Degree histogram — the first diagnostic anyone runs on a link graph
+    * (hub detection, power-law sanity check, skew sizing for the
+    * PageRank/CC shuffles above). Two chained hash aggs: per-node degree,
+    * then nodes per degree. Both partial+final; nothing sorts.
+    */
   def degreeHistogram(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst")).distinct()
       .groupBy(col("src")).agg(count(lit(1)).as("degree"))
@@ -686,10 +628,10 @@ object Graph {
     * the ball — the documented bounded-round caveat, same as [[kCore]]'s
     * bounded peeling).
     *
-    * Shape: the [[landmarkCloseness]] single-source BFS (frontier dedup
-    * per round, edges checkpointed), a min-depth aggregate (checkpointed
-    * — the conflict join uses it twice), then one edge-to-depths
-    * equi-join pair and a 1-row exact rollup.
+    * Shape: the [[bfsReached]] single-source BFS (edges persisted in the
+    * src layout, as in [[landmarkCloseness]]), a min-depth aggregate
+    * (checkpointed — the conflict join uses it twice), then one
+    * edge-to-depths equi-join pair and a 1-row exact rollup.
     *
     * Output: one row — (n_reached, n_edges_x2, n_conflicts_x2,
     * is_bipartite_ball), edge counts in the symmetrized directed form.
@@ -697,30 +639,12 @@ object Graph {
   def bipartiteCheck(edges: DataFrame, sourceNode: Long, rounds: Int)
       : DataFrame = {
     require(rounds >= 1 && rounds <= 12, "rounds in [1,12]")
-    // union symmetrize kept deliberately: an r17 explode-based one-scan
-    // variant (read the source once, emit both directions) measured flat-
-    // to-slower at sf0.1 — the union's two scan branches run as twice the
-    // parallel tasks on the 3-split input, which beats halving the IO on
-    // an otherwise idle 32-core box. At cluster scale both forms saturate.
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).distinct()
     // persist + src layout: see landmarkCloseness's note (r17)
-    val e = und.persist()
-    var frontier: DataFrame = edges.sparkSession.range(1)
+    val e = symmetrize(edges).repartition(col("src")).distinct().persist()
+    val start = edges.sparkSession.range(1)
       .select(lit(sourceNode).as("node"), lit(0L).as("d"))
-    var reached = frontier
-    for (i <- 1 to rounds) {
-      val step = frontier.as("f")
-        .join(e.as("g"), col("f.node") === col("g.src"))
-        .select(col("g.dst").as("node"), lit(i.toLong).as("d"))
-      // persist, not localCheckpoint: same dual-consumer recompute (and the
-      // same Union constraint-rewrite landmine) as landmarkCloseness
-      frontier = if (i < rounds) step.distinct().persist() else step
-      reached = reached.union(frontier)
-    }
     val depth = Checkpoints.truncate(
-      reached.groupBy(col("node")).agg(min(col("d")).as("d")))
+      bfsReached(e, start, rounds).groupBy(col("node")).agg(min(col("d")).as("d")))
     val checked = e
       .join(depth.select(col("node").as("src"), col("d").as("du")),
         Seq("src"))
@@ -757,16 +681,8 @@ object Graph {
     // und feeds the degree agg AND the min-degree projection, deg feeds
     // the histogram AND both endpoint joins — truncate once each or the
     // whole edge derivation replans (and rescans) per reference
-    // union symmetrize kept deliberately: an r17 explode-based one-scan
-    // variant (read the source once, emit both directions) measured flat-
-    // to-slower at sf0.1 — the union's two scan branches run as twice the
-    // parallel tasks on the 3-split input, which beats halving the IO on
-    // an otherwise idle 32-core box. At cluster scale both forms saturate.
-    val und = graft.util.Checkpoints.truncate(
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    val deg = graft.util.Checkpoints.truncate(
+    val und = Checkpoints.truncate(symmetrize(edges).distinct())
+    val deg = Checkpoints.truncate(
       und.groupBy(col("src")).agg(count(lit(1)).as("_deg")))
     val degHist = deg.groupBy(col("_deg").as("dg"))
       .agg(count(lit(1)).as("dcnt"))

@@ -150,10 +150,13 @@ object Raster {
     * (species_range_etl.py:54-57,64-69,118-120): keep incoming rows whose
     * key is absent from the existing sink. At scale this is a shuffled hash
     * anti-join on the key — or a broadcast anti-join when `existing` is a
-    * pruned key-only projection.
+    * pruned key-only projection. Rows keep `incoming`'s column order (a
+    * USING join would move the keys first), so appending them to the sink
+    * writes files with the sink's own schema.
     */
   def incrementalAntiJoin(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
     incoming.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .select(incoming.columns.map(col): _*)
 
   /** O-20 — speciesdata sink (species_range_etl.py:230-236). Parquet stands
     * in for PostGIS offline; `mode` mirrors `if_exists="replace"`. Partition

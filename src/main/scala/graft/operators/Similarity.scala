@@ -264,13 +264,12 @@ object Similarity {
     // checkpoint the k-row centroid table each round (same pattern as
     // Contiguity's star loop): without it the plan embeds the FULL prior
     // lineage in every assign, growing super-linearly with iters; the
-    // eager truncate materializes the new round before rotate() frees the
+    // eager truncate materializes the new round before release frees the
     // previous round's blocks
-    val rot = new graft.util.Checkpoints.Rotation(vecs.sparkSession)
     for (_ <- 1 to iters) {
-      rot.begin()
+      val prev = cents
       cents = graft.util.Checkpoints.truncate(update(assign(cents)))
-      rot.rotate()
+      graft.util.Checkpoints.release(prev)
     }
     assign(cents)
   }

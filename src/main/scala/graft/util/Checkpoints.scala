@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage truncation for iterative operators (PageRank, star-contraction
   * CC, k-means, BPE): every round references its previous round's output
@@ -14,6 +15,22 @@ import org.apache.spark.sql.DataFrame
   * `checkpoint()`; otherwise fall back to `localCheckpoint()`. Callers opt
   * in to durability purely through Spark's own session-level setting — no
   * per-operator flags to thread.
+  *
+  * The lifecycle of an iteration loop is `truncate` each round, then
+  * `release` the round it replaced once the new round is materialized:
+  *
+  * {{{
+  *   var cur = Checkpoints.truncate(init)
+  *   for (_ <- 1 to iters) {
+  *     val prev = cur
+  *     cur = Checkpoints.truncate(step(prev))   // eager, or lazy + an action
+  *     Checkpoints.release(prev)
+  *   }
+  * }}}
+  *
+  * The loop releases only what it truncated itself, so loops running in
+  * the same session never free each other's blocks; the final round is
+  * never released — callers build their result on it.
   */
 object Checkpoints {
 
@@ -34,6 +51,23 @@ object Checkpoints {
     // incrementally and evict to disk per-block under pressure.
     else df.localCheckpoint(eager)
 
+  /** Free the blocks behind DataFrames that [[truncate]] returned: the RDD
+    * of their `LogicalRDD`. Spark would reclaim them only once the
+    * ContextCleaner notices the RDD object was GC'd, so an N-round loop
+    * otherwise holds N copies of its iteration state. A no-op for any
+    * other DataFrame, persisted or derived; a durable checkpoint keeps its
+    * files.
+    *
+    * Call it only after every action that reads `dfs` has run: a
+    * lineage-truncated RDD cannot recompute, so a later read of a
+    * released round fails instead of slowing down. Non-blocking.
+    */
+  def release(dfs: DataFrame*): Unit =
+    dfs.foreach(_.queryExecution.logical match {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ =>
+    })
+
   /** Release every RDD this session still holds persisted blocks for
     * (localCheckpoint / cache). Spark frees such blocks only when the
     * async ContextCleaner notices the RDD object itself was GC'd, so a
@@ -46,57 +80,16 @@ object Checkpoints {
     * an operator: a lineage-truncated RDD cannot recompute, so releasing
     * blocks a still-live DataFrame will be asked for again would fail the
     * later action, not slow it down. Non-blocking (removal proceeds
-    * asynchronously on the executors).
+    * asynchronously on the executors). It leaves the SQL CacheManager
+    * entries of `persist()`ed plans registered, so a later `persist()` of
+    * the same plan reuses a dead entry and recomputes on every read.
     *
     * SINGLE-THREADED-SESSION assumption: this releases every persisted
     * RDD in the session, so a concurrent query on a shared SparkSession
     * would lose its own truncated-lineage blocks and fail its later
     * actions. Bench/Verify drive queries strictly sequentially; a
-    * multi-tenant driver must scope release to its own RDD ids instead.
+    * multi-tenant driver must release its own tables with [[release]].
     */
   def releaseAll(ss: org.apache.spark.sql.SparkSession): Unit =
     ss.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-
-  /** Deterministic per-round block release for iteration loops that
-    * materialize each round with their own action (Contiguity's
-    * convergence checksum, k-means' eager centroid checkpoint). Once
-    * round i is materialized its blocks are self-contained, so round
-    * i−1's blocks are dead — but Spark won't reclaim them until the
-    * ContextCleaner runs, and an N-round loop otherwise holds N copies
-    * of the frontier. Usage per round:
-    *
-    * {{{
-    *   rot.begin()                  // BEFORE creating the round's checkpoint
-    *   val next = Checkpoints.truncate(step(e), eager = false)
-    *   ...action that materializes next (and any use of the old round)...
-    *   rot.rotate()                 // release the PREVIOUS round's blocks
-    * }}}
-    *
-    * Tracks rounds by diffing `sparkContext.getPersistentRDDs` ids
-    * (public API; `localCheckpoint` marks its RDD persisted at call time,
-    * before materialization). The final round is never released — callers
-    * build their result on it.
-    *
-    * SINGLE-THREADED-SESSION assumption: the diff is over the session's
-    * GLOBAL persistent-RDD map, so an RDD persisted by a concurrent query
-    * between begin() and rotate() would be mis-attributed to this loop
-    * and unpersisted one round later — fatal for that query if its RDD is
-    * lineage-truncated. Safe under the sequential Bench/Verify drivers; a
-    * shared-session driver must not run iterative operators concurrently.
-    */
-  final class Rotation(ss: org.apache.spark.sql.SparkSession) {
-    private val sc = ss.sparkContext
-    private var prevIds: Set[Int] = Set.empty
-    private var snap: Set[Int] = Set.empty
-
-    def begin(): Unit = snap = sc.getPersistentRDDs.keySet.toSet
-
-    def rotate(): Unit = {
-      val cur = sc.getPersistentRDDs
-      val mine = cur.keySet.toSet -- snap
-      cur.iterator.filter(kv => prevIds(kv._1))
-        .foreach(_._2.unpersist(blocking = false))
-      prevIds = mine
-    }
-  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.util.Checkpoints
 
@@ -23,24 +25,17 @@ class CheckpointsSpec extends SparkSpec {
     assert(persistedIds.isEmpty)
   }
 
-  test("Rotation keeps exactly the newest round's blocks") {
+  test("release keeps exactly the newest round's blocks") {
     Checkpoints.releaseAll(spark)
-    val rot = new Checkpoints.Rotation(spark)
-
-    rot.begin()
     var cur = Checkpoints.truncate(spark.range(10).toDF("v"), eager = false)
     assert(cur.count() == 10) // materialize round 0
-    val ids0 = persistedIds
-    rot.rotate() // nothing to release yet
-    assert(persistedIds == ids0)
-
     for (round <- 1 to 3) {
-      rot.begin()
       val before = persistedIds
+      val prev = cur
       cur = Checkpoints.truncate(cur.select((col("v") + 1).as("v")), eager = false)
       assert(cur.agg(sum("v")).collect()(0).getLong(0) == (0 until 10).map(_ + round).sum)
       val mine = persistedIds -- before
-      rot.rotate()
+      Checkpoints.release(prev)
       // only this round's blocks survive — every prior round was released
       assert(persistedIds == mine, s"round $round leaked prior-round blocks")
       assert(mine.nonEmpty)
@@ -48,6 +43,35 @@ class CheckpointsSpec extends SparkSpec {
     // the FINAL round stays usable after the loop (its blocks were never
     // released) — this is what callers build their result on
     assert(cur.agg(sum("v")).collect()(0).getLong(0) == (0 until 10).map(_ + 3).sum)
+    // anything that is not a truncated table is left alone
+    val cached = spark.range(5).toDF("c").persist()
+    assert(cached.count() == 5)
+    val held = persistedIds
+    Checkpoints.release(cached, cur.select(col("v")))
+    assert(persistedIds == held)
+    Checkpoints.releaseAll(spark)
+  }
+
+  test("interleaved loops release only their own rounds") {
+    Checkpoints.releaseAll(spark)
+    def rddId(df: DataFrame) =
+      df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+    def step(df: DataFrame) = Checkpoints.truncate(df.select((col("v") + 1).as("v")))
+    def total(df: DataFrame) = df.agg(sum("v")).collect()(0).getLong(0)
+    var a = Checkpoints.truncate(spark.range(10).toDF("v"))
+    var b = Checkpoints.truncate(spark.range(20).toDF("v"))
+    for (round <- 1 to 3) {
+      val (prevA, prevB) = (a, b)
+      a = step(a)
+      b = step(b) // loop B persists a round in the middle of loop A's round
+      Checkpoints.release(prevA)
+      assert(persistedIds == Set(rddId(a), rddId(prevB), rddId(b)),
+        s"round $round: loop A's release touched loop B's blocks")
+      Checkpoints.release(prevB)
+      assert(persistedIds == Set(rddId(a), rddId(b)))
+      assert(total(a) == (0 until 10).map(_ + round).sum)
+      assert(total(b) == (0 until 20).map(_ + round).sum)
+    }
     Checkpoints.releaseAll(spark)
   }
 

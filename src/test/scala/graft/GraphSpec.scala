@@ -111,6 +111,32 @@ class GraphSpec extends SparkSpec {
     assert(r === r2, "snapped sums must make scores layout-independent")
   }
 
+  test("HITS with AQE off matches AQE on and keeps one round's raw tables") {
+    // two hubs sharing authorities, a chain and a cycle: every node is
+    // both a source and a target somewhere, so each round moves scores
+    val g = Seq((0L, 1L), (0L, 3L), (0L, 5L), (2L, 1L), (2L, 3L), (3L, 4L),
+      (4L, 6L), (6L, 3L), (5L, 7L), (7L, 0L)).toDF("src", "dst")
+    def run() = Graph.hits(g, iters = 3).as[(Long, Double, Double)].collect().toSet
+    val key = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.get(key)
+    graft.util.Checkpoints.releaseAll(spark)
+    try {
+      spark.conf.set(key, "true")
+      val on = run()
+      graft.util.Checkpoints.releaseAll(spark)
+      spark.conf.set(key, "false")
+      val off = run()
+      assert(off === on)
+      // the edge table, the node table and ONE round's aRaw/hRaw — a loop
+      // that kept every round would hold two more per round
+      val held = spark.sparkContext.getPersistentRDDs.size
+      assert(held <= 4, s"HITS left $held persisted RDDs")
+    } finally {
+      spark.conf.set(key, prior)
+      graft.util.Checkpoints.releaseAll(spark)
+    }
+  }
+
   test("triangleCounts on K4 plus a pendant edge") {
     // K4 on 1..4 (4 triangles, every node in 3 of them); node 5 hangs off
     // node 1 and is in none. Duplicate + reversed + self edges must be

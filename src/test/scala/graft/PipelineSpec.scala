@@ -3,6 +3,7 @@ package graft
 import graft.functions.Geom
 import graft.operators.{Raster, SpeciesPipeline}
 import java.nio.file.Files
+import org.apache.spark.sql.functions.{concat, lit}
 
 /** End-to-end speciesdata pipeline on golden grids, including the parquet
   * sink round-trip (O-20) and incremental anti-join semantics (O-19).
@@ -73,5 +74,24 @@ class PipelineSpec extends SparkSpec {
     val newer = incoming.unionByName(Seq(("maplex", "25")).toDF("species", "threshold"))
     assert(Raster.incrementalAntiJoin(newer, readBack.select("species", "threshold"),
       Seq("species", "threshold")).count() === 1)
+  }
+
+  test("an incremental append keeps the sink's column order") {
+    val out = SpeciesPipeline.speciesData(spark, s"$gridDir/*.asc")
+    val sink = Files.createTempDirectory("graft-sink").toString + "/speciesdata"
+    Raster.writeSpeciesData(out, sink)
+    val firstSchema = spark.read.parquet(sink).schema
+    // a second batch of new species: every row survives the anti-join
+    val batch = out.withColumn("species", concat($"species", lit("_b")))
+    val todo = Raster.incrementalAntiJoin(batch, spark.read.parquet(sink),
+      Seq("species", "threshold"))
+    assert(todo.columns.toSeq === out.columns.toSeq)
+    todo.write.mode("append").parquet(sink)
+    // a bare read takes its schema from one file's footer, so every file
+    // must carry the first write's schema
+    assert(spark.read.parquet(sink).schema === firstSchema)
+    val files = new java.io.File(sink).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+    for (f <- files) assert(spark.read.parquet(f).schema === firstSchema, f)
+    assert(spark.read.parquet(sink).count() === 12)
   }
 }

@@ -353,34 +353,62 @@ class PlanSpec extends SparkSpec {
       "sketch must be one slot agg + one group window, nothing more")
   }
 
-  test("dangling pagerank keeps equi-join routing (full lineage)") {
+  /** Executed plans of every query `body` runs — each round's eager or
+    * lazy truncation and the final collect — gathered with a
+    * QueryExecutionListener, so a checkpointed loop is inspected round by
+    * round instead of as one full-lineage plan.
+    */
+  private def roundPlans(body: => org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body.collect()
+      // events arrive asynchronously and in order: the final collect's
+      // event means every round's has arrived
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val got = plans.asScala.toSeq
+    assert(got.exists(_._1 == "collect"), "the final collect was never reported")
+    assert(got.count(_._1 == "localCheckpoint") >= 2, s"no round plans: ${got.map(_._1)}")
+    got.map(_._2)
+  }
+
+  test("dangling pagerank keeps equi-join routing (every round)") {
     import org.apache.spark.sql.functions.col
     val edges = spark.read.parquet(s"$dir/lineitem.parquet")
       .select((col("l_orderkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val p = graft.operators.Graph
-      .pageRank(edges, iters = 1, checkpoint = false, redistributeDangling = true)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"),
+    val ps = roundPlans(graft.operators.Graph
+      .pageRank(edges, iters = 1, redistributeDangling = true))
+    assert(!ps.exists(_.contains("CartesianProduct")),
       "the dangling scalar must broadcast, never plan a cartesian")
-    assert(p.contains("Exchange hashpartitioning"))
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), "contribution routing must be an equi-join")
+    assert(ps.exists(_.contains("Exchange hashpartitioning")))
+    assert(ps.exists(p => p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
+      p.contains("BroadcastHashJoin")), "contribution routing must be an equi-join")
   }
 
-  test("pagerank iterations are equi-joins + hash aggs (full lineage)") {
+  test("pagerank iterations are equi-joins + hash aggs (every round)") {
     import org.apache.spark.sql.functions.col
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select((col("l_orderkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
     val edges = li.union(li.select(col("dst").as("src"), col("src").as("dst")))
-    val p = graft.operators.Graph.pageRank(edges, iters = 1, checkpoint = false)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"))
+    val ps = roundPlans(graft.operators.Graph.pageRank(edges, iters = 1))
+    assert(!ps.exists(_.contains("CartesianProduct")))
     // SinglePartition exchanges exist ONLY for the 1-row n_nodes total
     // (inherently single-partition, bounded); the per-destination
     // contribution sums must be hash-partitioned aggs + equi-joins
-    assert(p.contains("Exchange hashpartitioning"))
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), "contribution routing must be an equi-join")
+    assert(ps.exists(_.contains("Exchange hashpartitioning")))
+    assert(ps.exists(p => p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
+      p.contains("BroadcastHashJoin")), "contribution routing must be an equi-join")
   }
 
   test("triangle counting is equi-joins only — wedge join never goes cartesian") {

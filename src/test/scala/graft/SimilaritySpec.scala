@@ -193,7 +193,7 @@ class SimilaritySpec extends SparkSpec {
     // this synthetic corpus is largely isotropic noise (distances
     // concentrate), so lossy 4-byte codes top out near 0.25 recall here —
     // chance is 5/499 ≈ 0.01, so 0.2+ is 20× better than guessing, and
-    // finer codebooks (8×8@32) only reach 0.4 (PqProbe)
+    // finer codebooks (8×8@32) only reach about 0.4 on the same corpus
     assert(recall >= 0.2,
       f"ADC on 4x16 codebooks should recover far more of exact L2 top-5 " +
         f"than the ~0.01 chance baseline (got $recall%.2f)")
