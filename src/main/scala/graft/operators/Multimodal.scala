@@ -439,12 +439,4 @@ object Multimodal {
         .map { case (chunk, i) => Frame(r.doc_id, i, chunk) }
     }
   }
-
-  /** STUB resize: truncate/pad the fake frame to `outBytes` (real impl:
-    * image scaling). Pure per-row scalar — stays in the narrow stage.
-    */
-  def resizeStub(frames: Dataset[Frame], outBytes: Int): Dataset[Frame] = {
-    implicit val enc = Encoders.product[Frame]
-    frames.map(f => f.copy(frame = java.util.Arrays.copyOf(f.frame, outBytes)))
-  }
 }

@@ -180,17 +180,6 @@ object Similarity {
         col("best.embedding").as("embedding"), col("best.norm").as("norm"))
   }
 
-  /** Cell-size census of the [[ivfPairs]] coarse index — the
-    * diagnostic behind the centroid-count scale knob: the within-cell
-    * candidate-pair mass the pair join will pay is Σ d·(d−1)/2 over
-    * these rows, and raising `numCentroids` with N (∝ √N is the
-    * classic IVF sizing) is what keeps it flat. One extra hash agg
-    * over the same assignment [[ivfPairs]] computes anyway.
-    */
-  def ivfCellSizes(vecs: DataFrame, numCentroids: Int): DataFrame =
-    ivfAssign(vecs, numCentroids)
-      .groupBy(col("cell")).agg(count(lit(1)).as("d"))
-
   /** Int8 scalar quantization — the standard 4× memory reduction before an
     * ANN index ships to serving: per-vector affine map of each coordinate
     * onto the [-128, 127] grid (`q = floor((x-mn)/((mx-mn)/255) + 0.5) - 128`),

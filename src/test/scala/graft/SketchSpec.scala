@@ -137,6 +137,31 @@ class SketchSpec extends SparkSpec {
       "cell-wise sum of slice sketches must equal the union's sketch")
   }
 
+  test("grouped count-min: each key's cells == the ungrouped sketch of its slice") {
+    import graft.operators.Sketch
+    import spark.implicits._
+    val rows = (1 to 300).map(i => ("a", s"tok${i % 40}")) ++
+      (1 to 80).map(i => ("b", s"word${i % 11}")) ++
+      (1 to 250).map(i => ("a", s"tok${i % 25}"))
+    val toks = rows.toDF("key", "token")
+    val grouped = Sketch.cmsSketchBy(toks, Seq("key"), d = 4, w = 64)
+      .as[(String, Int, Long, Long)].collect()
+    for (k <- Seq("a", "b")) {
+      val keyCells = grouped.filter(_._1 == k).map(r => (r._2, r._3, r._4)).toSet
+      val sliceCells = Sketch.cmsSketch(
+          toks.filter(col("key") === k).select("token"), d = 4, w = 64)
+        .as[(Int, Long, Long)].collect().toSet
+      assert(keyCells === sliceCells,
+        s"key $k: grouped cells must equal the sketch of its slice")
+    }
+    // every (key, seed) row of counters sums to the key's token count
+    val nTokens = rows.groupBy(_._1).map { case (k, rs) => k -> rs.size.toLong }
+    val seedSums = grouped.groupBy(r => (r._1, r._2))
+      .map { case (ks, rs) => ks -> rs.map(_._4).sum }
+    assert(seedSums === (for (k <- nTokens.keys; s <- 0 until 4)
+      yield (k, s) -> nTokens(k)).toMap)
+  }
+
   test("quantile slot histograms sum-merge losslessly across slices") {
     import graft.operators.Quantile
     import spark.implicits._

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Similarity, TextAnalysis}
 import graft.functions.Portable
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Text-analysis and similarity operators on controlled inputs. */
@@ -402,4 +403,58 @@ class TextSpec extends SparkSpec {
     val plan = TextAnalysis.readability(d).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"readability must not shuffle:\n$plan")
   }
+
+  test("text-hygiene operators run UNCHANGED on a stream (pure column algebra)") {
+    // quality scoring + repetition filtering are per-row scalar algebra,
+    // so the exact same operators apply to a readStream DataFrame — the
+    // streaming ingest path of the corpus pipeline needs no twin code
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val filtered = graft.operators.TextAnalysis.repetitionStats(
+        graft.operators.TextAnalysis.qualityScore(
+          graft.operators.TextAnalysis.normalizeText(
+            input.toDF().toDF("doc_id", "text"))))
+      .select("doc_id", "quality", "keep")
+    val q = filtered.writeStream.format("memory").queryName("hygiene_s")
+      .outputMode("append").start()
+    try {
+      input.addData(
+        (1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "spam spam spam spam spam spam"))
+      q.processAllAvailable()
+      val rows = spark.table("hygiene_s")
+        .select("doc_id", "keep").as[(Long, Int)].collect().sortBy(_._1)
+      assert(rows.toSeq === Seq((1L, 1), (2L, 0))) // prose keeps, spam drops
+    } finally q.stop()
+  }
+
+  test("pii scrub and int8 quantization run UNCHANGED on a stream") {
+    implicit val sqlCtx = spark.sqlContext
+    val piiIn = MemoryStream[(Long, String)]
+    val scrubbed = graft.operators.TextAnalysis.scrubPii(
+        piiIn.toDF().toDF("doc_id", "text"))
+      .select("doc_id", "n_emails", "scrubbed")
+    val q1 = scrubbed.writeStream.format("memory").queryName("pii_s")
+      .outputMode("append").start()
+    try {
+      piiIn.addData((1L, "write to a@b.io now"))
+      q1.processAllAvailable()
+      val r = spark.table("pii_s").collect()
+      assert(r.length === 1 && r(0).getLong(1) === 1L &&
+        r(0).getString(2) === "write to <EMAIL> now")
+    } finally q1.stop()
+    val vecIn = MemoryStream[(Long, Array[Float])]
+    val quant = graft.operators.Similarity.quantizeInt8(
+        vecIn.toDF().toDF("vec_id", "embedding"))
+      .select("vec_id", "q")
+    val q2 = quant.writeStream.format("memory").queryName("quant_s")
+      .outputMode("append").start()
+    try {
+      vecIn.addData((7L, Array(0.0f, 1.0f)))
+      q2.processAllAvailable()
+      val r = spark.table("quant_s").collect()
+      assert(r.length === 1 && r(0).getSeq[Long](1) === Seq(-128L, 127L))
+    } finally q2.stop()
+  }
+
 }
